@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deepblocker_spark.operators.lsh import lsh_candidates
+from deepblocker_spark.operators.grouped import cell_topk, grid_salt_split
+from deepblocker_spark.operators.lsh import _cosine_scorer, lsh_candidates
 from deepblocker_spark.operators.topk import exact_topk_join
 
 from deepblocker_spark.operators.bc_registry import (
@@ -208,173 +209,39 @@ def _auto_n_cells(rows: int) -> int:
     return min(4096, max(16, int(rows ** 0.5)))
 
 
-def grid_salt_split(assigned: DataFrame, max_cell_rows: int) -> DataFrame:
-    """SQ×SI grid split of oversized cells over a role-tagged assignment
-    frame (_id, cell, _role, _emb) — extracted from ``_ivf_pairs`` so
-    ivf-flat and ivf-pq (operators/pq.py) share it. A cell whose query or
-    index role exceeds ``max_cell_rows`` fans out into (cell, salt_q,
-    salt_i) tasks: each query row lands in its hash split salt_q and is
-    replicated across all SI index splits (index rows symmetrically), so
-    every (query, index) pair is examined exactly once — bounded tasks,
-    ZERO recall loss. Healthy cells keep literal-zero salts (no join in
-    the plan when nothing is oversized). ``assigned`` must already be
-    persisted (it is consumed twice: size agg + kernel)."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    over = (
-        assigned.select("cell", "_role")
-        .groupBy("cell")
-        .agg(
-            F.sum(F.when(F.col("_role") == 1, 1).otherwise(0)).alias("nq"),
-            F.sum(F.when(F.col("_role") == 0, 1).otherwise(0)).alias("ni"),
-        )
-        .filter((F.col("nq") > max_cell_rows) | (F.col("ni") > max_cell_rows))
-        .collect()
-    )
-    if over:
-        ceil = lambda n: -(-int(n) // max_cell_rows)  # noqa: E731
-        splits = assigned.sparkSession.createDataFrame(
-            [(int(r["cell"]), max(1, ceil(r["nq"])), max(1, ceil(r["ni"]))) for r in over],
-            StructType(
-                [
-                    StructField("cell", IntegerType(), False),
-                    StructField("_sq", IntegerType(), False),
-                    StructField("_si", IntegerType(), False),
-                ]
-            ),
-        )
-        is_q = F.col("_role") == 1
-        return (
-            assigned.join(F.broadcast(splits), ["cell"], "left")
-            .withColumn("_own", F.coalesce(F.when(is_q, F.col("_sq")).otherwise(F.col("_si")), F.lit(1)))
-            .withColumn("_other", F.coalesce(F.when(is_q, F.col("_si")).otherwise(F.col("_sq")), F.lit(1)))
-            .withColumn("_my", F.pmod(F.xxhash64(F.col("_id")), F.col("_own")).cast("int"))
-            .withColumn(
-                "_rep",
-                F.explode(F.sequence(F.lit(0), (F.col("_other") - 1).cast("int"))),
-            )
-            .select(
-                "_id", "cell",
-                F.when(is_q, F.col("_my")).otherwise(F.col("_rep")).alias("salt_q"),
-                F.when(is_q, F.col("_rep")).otherwise(F.col("_my")).alias("salt_i"),
-                "_role", "_emb",
-            )
-        )
-    return assigned.select(
-        "_id", "cell",
-        F.lit(0).alias("salt_q"), F.lit(0).alias("salt_i"),
-        "_role", "_emb",
-    )
-
-
 def _ivf_pairs(
     assigned: DataFrame,
+    scorer,
     k: int,
     id_type,
     mask_equal_ids: bool,
     max_cell_rows: int = 5_000,
-    emb_dtype: str = "f32",
 ) -> DataFrame:
-    """Probed-cell exact search over the union of role-tagged assignments.
-    Two shuffles total: one on (cell, salt_q, salt_i) (sort-based grouped
-    map, operators/grouped.py) and one fused dedup(keep-max)+top-K merge — a
-    probe pair can surface from several probed cells with identical sim.
+    """Probed-cell search over the union of role-tagged assignments
+    (``_id``, ``cell``, ``_role``, ``_emb``), shared by IVF-flat (cosine
+    scorer) and IVFADC (ADC scorer, operators/pq.py): persisted assignment
+    -> ``grouped.grid_salt_split`` on ``cell`` -> ``grouped.cell_topk``.
+    Two shuffles total: the (cell, salt_q, salt_i) kernel exchange and the
+    fused dedup(keep-max)+top-K merge — a probe pair can surface from
+    several probed cells with identical sim.
 
-    Hot cells are GRID salt-split, never truncated (VERDICT r2 #1 — the same
-    fix the dyadic LSH path got in r1 for hot buckets): a cell whose query
-    or index role exceeds ``max_cell_rows`` becomes an SQ x SI grid of tasks
-    keyed (cell, salt_q, salt_i) with SQ = ceil(n_queries/max_cell_rows) and
-    SI = ceil(n_index/max_cell_rows). Each query row lands in its hash split
-    salt_q and is replicated across all SI index splits (index rows
-    symmetrically), so every (query, index) pair of the cell is examined
-    exactly once: per-task cross-products are bounded by max_cell_rows^2
-    with ZERO recall loss vs the unsplit cell. A skewed corpus collapsing
-    into one mega-cell (boilerplate/empty docs — FIXTURES.md F1) therefore
-    fans out instead of serializing on one unbounded task. The assignment
-    frame is persisted and the (tiny, <= n_cells rows) oversized list is
-    collected from a narrow projection — one assignment pass total; when no
-    cell is oversized the salts are literal zeros and the plan keeps its
-    two-exchange shape with no join.
+    Hot cells are GRID salt-split, never truncated (VERDICT r2 #1): a skewed
+    corpus collapsing into one mega-cell (boilerplate/empty docs —
+    FIXTURES.md F1) fans out into tasks bounded by max_cell_rows^2 with ZERO
+    recall loss, instead of serializing on one unbounded task. The
+    assignment frame is persisted, so one assignment pass feeds both the
+    cell-size agg and the kernel; when no cell is oversized the plan keeps
+    its two-exchange shape with no join.
     """
-    import numpy as np
-    import pandas as pd
     from pyspark import StorageLevel
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
-    from deepblocker_spark.operators.grouped import (
-        _dedup_topk,
-        group_slices,
-        grouped_map_in_pandas,
-        pack_topk,
-        topk_per_key,
-    )
-    from deepblocker_spark.operators.topk import normalize_rows
-    from pyspark.sql.types import ArrayType
 
     assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
     _ASSIGN_CACHES.append(assigned)
-    salted = grid_salt_split(assigned, max_cell_rows)
-
-    # packed kernel output (round 6, same transport as the LSH kernels):
-    # one row per l_id with parallel (r_id, sim) arrays — the merge
-    # exchange carries ~k-fold fewer rows, bit-identical final pairs
-    pair_schema = StructType(
-        [
-            StructField("l_id", id_type, True),
-            StructField("_r", ArrayType(id_type), True),
-            StructField("_s", ArrayType(DoubleType()), True),
-        ]
+    return cell_topk(
+        grid_salt_split(assigned, ["cell"], max_cell_rows),
+        ["cell", "salt_q", "salt_i"], scorer, k, id_type,
+        mask_equal_ids=mask_equal_ids,
     )
-
-    def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Per-(cell, salt_q, salt_i) exact search over a frame of WHOLE
-        groups (sort-based grouped map — one Python call per ~batch, not per
-        cell)."""
-        outs = []
-        roles = pdf["_role"].to_numpy()
-        ids_all = pdf["_id"].to_numpy()
-        # whole-frame binary decode (one memcpy), slices per group — the
-        # same shape as the LSH kernel; no per-row LIST conversion
-        buf = b"".join(pdf["_emb"].to_numpy())
-        dt = np.float16 if emb_dtype == "f16" else np.float32
-        x_all = np.frombuffer(buf, dtype=dt).reshape(len(pdf), -1)
-        x_all = normalize_rows(np.nan_to_num(x_all.astype(np.float64)))
-        for a, b in group_slices(pdf, ["cell", "salt_q", "salt_i"]):
-            g_roles = roles[a:b]
-            q_idx = np.nonzero(g_roles == 1)[0] + a
-            i_idx = np.nonzero(g_roles == 0)[0] + a
-            if not len(q_idx) or not len(i_idx):
-                continue
-            qids = ids_all[q_idx]
-            iids = ids_all[i_idx]
-            qx = x_all[q_idx]
-            ix = x_all[i_idx]
-            sims = qx @ ix.T
-            if mask_equal_ids:
-                sims[qids[:, None] == iids[None, :]] = -np.inf
-            kk = min(k, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk] if kk < sims.shape[1] \
-                else np.broadcast_to(np.arange(sims.shape[1]), sims.shape).copy()
-            rows = np.repeat(np.arange(len(qids)), part.shape[1])
-            cols = part.ravel()
-            s = sims[rows, cols]
-            keep = s > -np.inf
-            outs.append(pd.DataFrame(
-                {"l_id": qids[rows[keep]], "r_id": iids[cols[keep]], "sim": s[keep]}
-            ))
-        if not outs:
-            return pd.DataFrame({"l_id": [], "_r": [], "_s": []})
-        # fused map-side combiner (see lsh_candidates.buckets_kernel)
-        local = _dedup_topk(
-            pd.concat(outs, ignore_index=True),
-            k, "l_id", "r_id", "sim", with_rank=False,
-        )
-        return pack_topk(local, "l_id", "r_id", "sim")
-
-    pairs = grouped_map_in_pandas(
-        salted, ["cell", "salt_q", "salt_i"], cell_kernel, pair_schema
-    )
-    return topk_per_key(pairs, k, pre_combine=False, packed_input=True)
 
 
 def ivf_topk(
@@ -395,7 +262,7 @@ def ivf_topk(
     search exactly within the probed cells; work per cell is bounded by
     cell size x probes — the standard ANN scale shape. One assignment scan
     emits both roles; cells exceeding ``max_cell_rows`` in either role are
-    grid salt-split with zero recall loss (see _ivf_pairs).
+    grid salt-split with zero recall loss (see grouped.grid_salt_split).
 
     ``n_cells=None`` auto-sizes to ~sqrt(N) (VERDICT r2 #9 — a fixed cell
     count degenerates as the corpus grows); ``rows_hint`` (e.g. a checkpoint
@@ -418,8 +285,8 @@ def ivf_topk(
                              emit_home=True, emit_probes=True,
                              emb_dtype=emb_dtype)
     id_type = df.select(id_col).schema.fields[0].dataType
-    return _ivf_pairs(assigned, k, id_type, mask_equal_ids=True,
-                      max_cell_rows=max_cell_rows, emb_dtype=emb_dtype)
+    return _ivf_pairs(assigned, _cosine_scorer(emb_dtype), k, id_type,
+                      mask_equal_ids=True, max_cell_rows=max_cell_rows)
 
 
 def ivf_topk_join(
@@ -470,9 +337,9 @@ def ivf_topk_join(
     queries = _assign_cells(left, l_id, emb_col, cents_bc, nprobe,
                             emit_home=False, emit_probes=True,
                             emb_dtype=emb_dtype)
-    return _ivf_pairs(index.unionByName(queries), k, l_type,
-                      mask_equal_ids=False, max_cell_rows=max_cell_rows,
-                      emb_dtype=emb_dtype)
+    return _ivf_pairs(index.unionByName(queries), _cosine_scorer(emb_dtype),
+                      k, l_type, mask_equal_ids=False,
+                      max_cell_rows=max_cell_rows)
 
 
 class IVFVectorPairing:

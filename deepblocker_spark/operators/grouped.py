@@ -19,6 +19,27 @@ Arrow batch sizing.
 At 100 TB this shape is strictly better than applyInPandas: identical
 shuffle volume, identical skew behavior (same hash partitioning), but the
 Python boundary is crossed once per ~10k rows instead of once per group.
+
+``cell_topk`` is the one partition -> local top-K -> merge skeleton behind
+every bucketed ANN path (LSH self and dyadic, IVF-flat, IVFADC). Its
+contract, stated once here:
+
+  * ``cells`` holds one row per (vector, cell) assignment: the cell key
+    columns, ``_id``, the payload the scorer reads and — unless the join
+    is a self-join — ``_role`` (1 = query row, 0 = index row). Hot cells
+    are fanned out beforehand by ``grid_salt_split``, whose ``salt_q`` /
+    ``salt_i`` columns then belong to the key.
+  * ``scorer(pdf) -> score`` runs once per kernel frame (whole groups,
+    keys sorted), so it decodes the frame in one pass; ``score(q, i)``
+    returns the float64 (len(q), len(i)) similarity block of query rows
+    ``q`` against index rows ``i`` (a slice or integer positions in pdf).
+  * Per group, a self-join scores the group against itself and keeps each
+    row's top-(k+1) minus the diagonal; otherwise query x index rows, with
+    equal ids masked to -inf when ``mask_equal_ids``, keeping top-k.
+  * The kernel's whole-frame output is reduced to a local per-query top-k
+    (``_dedup_topk``: keep-max dedup, (sim desc, r_id asc)), filtered by
+    ``min_sim`` and packed (``pack_topk``); one ``topk_per_key`` merge
+    exchange yields (l_id, r_id, sim, rank). Two exchanges total.
 """
 
 from __future__ import annotations
@@ -28,6 +49,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def grouped_map_in_pandas(
@@ -321,3 +343,153 @@ def topk_per_key(
         else narrow.repartition(num_partitions, key)
     )
     return part.mapInPandas(make_runner(True), out_schema)
+
+
+def grid_salt_split(frame: DataFrame, key_cols: list[str], max_rows: int) -> DataFrame:
+    """SQ x SI grid split of the oversized cells of a role-tagged frame
+    (``key_cols``, ``_id``, ``_role``, payload) -> the same rows plus
+    ``salt_q`` / ``salt_i``. A cell whose query or index role exceeds
+    ``max_rows`` fans out into (cell, salt_q, salt_i) tasks with
+    SQ = ceil(n_query/max_rows) and SI = ceil(n_index/max_rows): each
+    query row lands in its hash split salt_q and is replicated across all
+    SI index splits (index rows symmetrically), so every (query, index)
+    pair of the cell is examined exactly once — bounded tasks, ZERO recall
+    loss vs the unsplit cell. The oversized list (tiny by construction) is
+    collected from a narrow projection and re-injected as a broadcast;
+    healthy cells keep literal-zero salts, so when nothing is oversized
+    the plan has no join. ``frame`` should be persisted: it is consumed
+    twice (size agg + kernel)."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    over = (
+        frame.select(*key_cols, "_role")
+        .groupBy(*key_cols)
+        .agg(
+            F.sum(F.when(F.col("_role") == 1, 1).otherwise(0)).alias("nq"),
+            F.sum(F.when(F.col("_role") == 0, 1).otherwise(0)).alias("ni"),
+        )
+        .filter((F.col("nq") > max_rows) | (F.col("ni") > max_rows))
+        .collect()
+    )
+    if not over:
+        return frame.select(
+            "*", F.lit(0).alias("salt_q"), F.lit(0).alias("salt_i")
+        )
+    ceil = lambda n: max(1, -(-int(n) // max_rows))  # noqa: E731
+    splits = frame.sparkSession.createDataFrame(
+        [(*(r[c] for c in key_cols), ceil(r["nq"]), ceil(r["ni"])) for r in over],
+        StructType(
+            [frame.schema[c] for c in key_cols]
+            + [
+                StructField("_sq", IntegerType(), False),
+                StructField("_si", IntegerType(), False),
+            ]
+        ),
+    )
+    is_q = F.col("_role") == 1
+    return (
+        frame.join(F.broadcast(splits), key_cols, "left")
+        .withColumn("_own", F.coalesce(F.when(is_q, F.col("_sq")).otherwise(F.col("_si")), F.lit(1)))
+        .withColumn("_other", F.coalesce(F.when(is_q, F.col("_si")).otherwise(F.col("_sq")), F.lit(1)))
+        .withColumn("_my", F.pmod(F.xxhash64(F.col("_id")), F.col("_own")).cast("int"))
+        .withColumn(
+            "_rep",
+            F.explode(F.sequence(F.lit(0), (F.col("_other") - 1).cast("int"))),
+        )
+        .select(
+            *frame.columns,
+            F.when(is_q, F.col("_my")).otherwise(F.col("_rep")).alias("salt_q"),
+            F.when(is_q, F.col("_rep")).otherwise(F.col("_my")).alias("salt_i"),
+        )
+    )
+
+
+def cell_topk(
+    cells: DataFrame,
+    key_cols: list[str],
+    scorer,
+    k: int,
+    l_type,
+    r_type=None,
+    self_join: bool = False,
+    mask_equal_ids: bool = False,
+    min_sim: float | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Per-cell exact top-k over ``cells`` grouped by ``key_cols``, merged
+    into a global per-query top-k -> (l_id, r_id, sim, rank). See the
+    module docstring for the contract; ``l_type`` / ``r_type`` are the
+    query / index id types (``r_type`` defaults to ``l_type``)."""
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+
+    pair_schema = StructType(
+        [
+            StructField("l_id", l_type, True),
+            StructField("_r", ArrayType(r_type or l_type), True),
+            StructField("_s", ArrayType(DoubleType()), True),
+        ]
+    )
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        score = scorer(pdf)
+        ids = pdf["_id"].to_numpy()
+        roles = None if self_join else pdf["_role"].to_numpy()
+        out_l, out_r, out_s = [], [], []
+        for a, b in group_slices(pdf, key_cols):
+            if self_join:
+                if b - a < 2:
+                    continue
+                q = i = slice(a, b)
+            else:
+                g = roles[a:b]
+                q = np.nonzero(g == 1)[0] + a
+                i = np.nonzero(g == 0)[0] + a
+                if not len(q) or not len(i):
+                    continue
+            qids, iids = ids[q], ids[i]
+            sims = score(q, i)
+            nq, ni = sims.shape
+            if self_join:
+                # top-(k+1) incl. self, then drop the diagonal
+                take = min(k, ni - 1) + 1
+                part = np.argpartition(-sims, take - 1, axis=1)[:, :take]
+            else:
+                if mask_equal_ids:
+                    sims[qids[:, None] == iids[None, :]] = -np.inf
+                take = min(k, ni)
+                part = (
+                    np.argpartition(-sims, take - 1, axis=1)[:, :take]
+                    if take < ni
+                    else np.broadcast_to(np.arange(ni), sims.shape)
+                )
+            rows = np.repeat(np.arange(nq), take)
+            cols = part.ravel()
+            s = sims[rows, cols]
+            keep = rows != cols if self_join else s > -np.inf
+            out_l.append(qids[rows[keep]])
+            out_r.append(iids[cols[keep]])
+            out_s.append(s[keep])
+        if not out_l:
+            return pd.DataFrame({"l_id": [], "_r": [], "_s": []})
+        # map-side combiner fused into the kernel call: the python-sort
+        # grouped map hands the kernel its whole partition, so this IS the
+        # per-partition local top-k, with no extra Arrow round-trip
+        local = _dedup_topk(
+            pd.DataFrame(
+                {
+                    "l_id": np.concatenate(out_l),
+                    "r_id": np.concatenate(out_r),
+                    "sim": np.concatenate(out_s),
+                }
+            ),
+            k, "l_id", "r_id", "sim", with_rank=False,
+        )
+        if min_sim is not None:
+            # commutes with the merge's dedup + top-k
+            local = local[local["sim"].to_numpy() >= min_sim]
+        return pack_topk(local, "l_id", "r_id", "sim")
+
+    pairs = grouped_map_in_pandas(
+        cells, key_cols, kernel, pair_schema, num_partitions=num_partitions
+    )
+    return topk_per_key(pairs, k, pre_combine=False, packed_input=True)

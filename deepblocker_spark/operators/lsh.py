@@ -7,8 +7,9 @@ an O(N^2) wall. Here:
 
   random-hyperplane signatures (carrying the vector — no join back to the
   source)  ->  band buckets  ->  shuffle on bucket key  ->  per-bucket exact
-  cosine (sort-based grouped map, operators/grouped.py)  ->  fused
-  dedup + global per-left top-K (one more shuffle, vectorized kernel).
+  cosine  ->  fused dedup + global per-left top-K (one more shuffle); the
+  last three steps are the shared cell skeleton ``grouped.cell_topk``,
+  with this module supplying only the cosine scorer.
 
 Design-for-scale notes:
   * The hyperplane matrix is derived from a seed — every executor
@@ -32,9 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
     StructField,
@@ -42,13 +41,7 @@ from pyspark.sql.types import (
 )
 
 from deepblocker_spark.operators.embed import EMBEDDING
-from deepblocker_spark.operators.grouped import (
-    _dedup_topk,
-    group_slices,
-    grouped_map_in_pandas,
-    pack_topk,
-    topk_per_key,
-)
+from deepblocker_spark.operators.grouped import cell_topk, grid_salt_split
 from deepblocker_spark.operators.topk import normalize_rows
 
 from deepblocker_spark.operators.bc_registry import (
@@ -178,16 +171,6 @@ def bucket_stats(buckets: DataFrame) -> DataFrame:
     return buckets.groupBy("band", "bucket").agg(F.count("*").alias("size"))
 
 
-# Persisted signature frames awaiting release (VERDICT r2 #2: signatures are
-# computed ONCE per side into a persisted frame consumed by both the
-# bucket-size aggregation and the candidate kernel — previously each consumer
-# re-ran the full scan + hyperplane matmul, 2x per side). The candidate plan
-# returned to the caller still reads the cache lazily, so the frames cannot
-# be unpersisted inside the operator; callers (pipeline stage boundaries,
-# bench) call release_signature_caches() after their action, and Spark's
-# ContextCleaner unpersists dropped frames as the GC backstop. At true 100 TB
-# the same role is played by the checkpoint stage boundary (the candidates
-# stage materializes, then caches are released).
 # Worker-lifetime id->row lookup for the broadcast-gather kernel: building
 # the hash Index once per (worker, broadcast) instead of once per Arrow
 # batch (same cap-at-2 shape as topk.py's f32 cache — at most two gathers
@@ -217,6 +200,86 @@ def _gather_rows(bc, ids_all: np.ndarray) -> np.ndarray:
     return mat[pos]
 
 
+def _check_gather(gather: str) -> None:
+    if gather not in ("auto", "broadcast", "exchange"):
+        raise ValueError(
+            f"unknown gather: {gather!r} (use 'auto', 'broadcast' or 'exchange')"
+        )
+
+
+def _broadcast_gather(sides, gather, gather_max_bytes, n_bands, dim, emb_dtype):
+    """Broadcast-gather decision and collect for the LSH kernels.
+    ``sides`` is [(persisted signature frame, id column), ...] — one entry
+    for the self-join, (left, right) for the dyadic join. Under 'auto' every
+    side's matrix must fit ``gather_max_bytes``; the signature frames are
+    persisted and n_rows = count / n_bands exactly, so the gate costs cached
+    counts, no extra scan. Each matrix is collected once from its frame's
+    band-0 slice (the embed stage is NOT recomputed).
+
+    -> (tracked broadcasts of (ids, matrix), kernel partition count), or
+    (None, None) when the vectors ride the exchange. The explicit partition
+    count keeps the narrow kernel exchange exempt from AQE coalescing: the
+    rows shrink ~6-25x but the kernel's matmul work per row does not, so
+    coalescing to a handful of fat partitions would starve the stage."""
+    dt_np = np.float16 if emb_dtype == "f16" else np.float32
+    item = np.dtype(dt_np).itemsize
+    if gather == "exchange" or (gather == "auto" and any(
+        sigs.count() // max(n_bands, 1) * dim * item > gather_max_bytes
+        for sigs, _ in sides
+    )):
+        return None, None
+    spark = sides[0][0].sparkSession
+    bcs = []
+    for sigs, key in sides:
+        b0 = sigs.filter(F.col("band") == 0).select(key, "_emb").toPandas()
+        mat = (
+            np.frombuffer(b"".join(b0["_emb"].to_numpy()), dtype=dt_np)
+            .reshape(len(b0), -1)
+            if len(b0)
+            else np.zeros((0, dim), dtype=dt_np)
+        )
+        bcs.append(_tracked(spark.sparkContext, (b0[key].to_numpy(), mat)))
+    return bcs, int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _cosine_scorer(emb_dtype: str, emb_bcs=None):
+    """``cell_topk`` scorer: cosine over f32/f16 vectors, decoded once per
+    kernel frame from the carried ``_emb`` blobs or, with ``emb_bcs``,
+    gathered from the broadcast matrices (one for a self-join; query- and
+    index-side for a dyadic join). The same per-value f16/f32 -> f64
+    conversion either way, so both transports score bit-identically."""
+    dt = np.float16 if emb_dtype == "f16" else np.float32
+
+    def scorer(pdf: pd.DataFrame):
+        if emb_bcs is None:
+            buf = b"".join(pdf["_emb"].to_numpy())
+            x = np.frombuffer(buf, dtype=dt).reshape(len(pdf), -1)
+            x = x.astype(np.float64)
+        elif len(emb_bcs) == 1:
+            x = _gather_rows(emb_bcs[0], pdf["_id"].to_numpy()).astype(np.float64)
+        else:
+            ids = pdf["_id"].to_numpy()
+            q = pdf["_role"].to_numpy() == 1
+            xq = _gather_rows(emb_bcs[0], ids[q])
+            x = np.empty((len(pdf), xq.shape[1]), dtype=np.float64)
+            x[q] = xq
+            x[~q] = _gather_rows(emb_bcs[1], ids[~q])
+        x = normalize_rows(np.nan_to_num(x))
+        return lambda q, i: x[q] @ x[i].T
+
+    return scorer
+
+
+# Persisted signature frames awaiting release (VERDICT r2 #2: signatures are
+# computed ONCE per side into a persisted frame consumed by both the
+# bucket-size aggregation and the candidate kernel — previously each consumer
+# re-ran the full scan + hyperplane matmul, 2x per side). The candidate plan
+# returned to the caller still reads the cache lazily, so the frames cannot
+# be unpersisted inside the operator; callers (pipeline stage boundaries,
+# bench) call release_signature_caches() after their action, and Spark's
+# ContextCleaner unpersists dropped frames as the GC backstop. At true 100 TB
+# the same role is played by the checkpoint stage boundary (the candidates
+# stage materializes, then caches are released).
 _SIG_CACHES: list[DataFrame] = []
 
 
@@ -335,10 +398,7 @@ def lsh_candidates(
       broadcast. At 100 TB auto always lands on exchange; per-worker
       memory cost of broadcast is one matrix copy per Python worker.
     """
-    if gather not in ("auto", "broadcast", "exchange"):
-        raise ValueError(
-            f"unknown gather: {gather!r} (use 'auto', 'broadcast' or 'exchange')"
-        )
+    _check_gather(gather)
     # Skew handling: oversized (hot) buckets are SALT-SPLIT, not truncated —
     # rows in a bucket bigger than max_bucket_rows get a deterministic
     # sub-bucket salt (xxhash64(id) % n_splits), bounding every task's
@@ -365,6 +425,7 @@ def lsh_candidates(
     over_rows = _oversized_buckets(
         sigs, max_bucket_rows, ["band", "bucket", "_splits"]
     )
+    cells = sigs.select(F.col(id_col).alias("_id"), "band", "bucket", "_emb")
     if over_rows:
         over = df.sparkSession.createDataFrame(
             over_rows,
@@ -376,127 +437,29 @@ def lsh_candidates(
                 ]
             ),
         )
-        joined = (
-            sigs.join(F.broadcast(over), ["band", "bucket"], "left")
+        cells = (
+            cells.join(F.broadcast(over), ["band", "bucket"], "left")
             .withColumn(
                 "salt",
                 F.when(F.col("_splits").isNull(), F.lit(0)).otherwise(
-                    F.pmod(F.xxhash64(F.col(id_col)), F.col("_splits"))
+                    F.pmod(F.xxhash64(F.col("_id")), F.col("_splits"))
                 ).cast("int"),
             )
             .drop("_splits")
         )
     else:
-        joined = sigs.withColumn("salt", F.lit(0))
+        cells = cells.withColumn("salt", F.lit(0))
 
-    # Broadcast-gather decision (see the docstring): the signature frame is
-    # persisted and n_rows = sigs.count() / n_bands exactly, so the auto
-    # gate costs one cached count, no extra scan.
-    dt_item = 2 if emb_dtype == "f16" else 4
-    use_broadcast = gather == "broadcast"
-    if gather == "auto":
-        n_rows = sigs.count() // max(n_bands, 1)
-        use_broadcast = n_rows * dim * dt_item <= gather_max_bytes
-    emb_bc = None
-    if use_broadcast:
-        b0 = sigs.filter(F.col("band") == 0).select(id_col, "_emb").toPandas()
-        dt_np = np.float16 if emb_dtype == "f16" else np.float32
-        mat = (
-            np.frombuffer(b"".join(b0["_emb"].to_numpy()), dtype=dt_np)
-            .reshape(len(b0), -1)
-            if len(b0)
-            else np.zeros((0, dim), dtype=dt_np)
-        )
-        emb_bc = _tracked(df.sparkSession.sparkContext, 
-            (b0[id_col].to_numpy(), mat)
-        )
-        joined = joined.select("band", "bucket", "salt", id_col)
-        # The narrow rows shrink the kernel exchange ~6-25x — enough that
-        # AQE's advisory size would coalesce it to a handful of fat
-        # partitions and starve the kernel stage of parallelism (the
-        # kernel's matmul work per row is UNCHANGED by row width). An
-        # explicit partition count keeps the bare repartition exempt from
-        # AQE coalescing at the session's configured width.
-        gather_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-
-    id_type = df.select(id_col).schema.fields[0].dataType
-    # PACKED kernel output: one row per l_id with parallel (r_id, sim)
-    # arrays (grouped.pack_topk) — the merge exchange carries ~k-fold
-    # fewer rows for the same payload; bit-identical final pairs
-    pair_schema = StructType(
-        [
-            StructField("l_id", id_type, True),
-            StructField("_r", ArrayType(id_type), True),
-            StructField("_s", ArrayType(DoubleType()), True),
-        ]
+    emb_bcs, gather_partitions = _broadcast_gather(
+        [(sigs, id_col)], gather, gather_max_bytes, n_bands, dim, emb_dtype
     )
-
-    def buckets_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one stack/normalize for the whole multi-group frame, tiny numpy
-        # slices per bucket (see grouped.py module doc for why this beats
-        # per-group applyInPandas)
-        ids_all = pdf[id_col].to_numpy()
-        if emb_bc is not None:
-            x_all = _gather_rows(emb_bc, ids_all)
-        else:
-            buf = b"".join(pdf["_emb"].to_numpy())
-            dt = np.float16 if emb_dtype == "f16" else np.float32
-            x_all = np.frombuffer(buf, dtype=dt).reshape(len(pdf), -1)
-        x_all = normalize_rows(np.nan_to_num(x_all.astype(np.float64)))
-        out_l, out_r, out_s = [], [], []
-        for a, b in group_slices(pdf, ["band", "bucket", "salt"]):
-            n = b - a
-            if n < 2:
-                continue
-            ids = ids_all[a:b]
-            x = x_all[a:b]
-            sims = x @ x.T
-            kk = min(k, n - 1)
-            # top-(k+1) incl. self, then drop self
-            take = min(kk + 1, n)
-            part = np.argpartition(-sims, take - 1, axis=1)[:, :take]
-            rows = np.repeat(np.arange(n), take)
-            cols = part.ravel()
-            keep = rows != cols
-            rows, cols = rows[keep], cols[keep]
-            out_l.append(ids[rows])
-            out_r.append(ids[cols])
-            out_s.append(sims[rows, cols])
-        if not out_l:
-            return pd.DataFrame({"l_id": [], "_r": [], "_s": []})
-        # map-side combiner FUSED into the kernel call (the python-sort
-        # grouped map hands the kernel its whole partition, so this IS the
-        # per-partition local top-k) — the pairs never take an extra
-        # Python<->JVM Arrow round-trip through a chained combiner pass
-        local = _dedup_topk(
-            pd.DataFrame(
-                {
-                    "l_id": np.concatenate(out_l),
-                    "r_id": np.concatenate(out_r),
-                    "sim": np.concatenate(out_s),
-                }
-            ),
-            k, "l_id", "r_id", "sim", with_rank=False,
-        )
-        if min_sim is not None:
-            # pre-merge row filter — commutes with the merge's dedup+topk,
-            # so filtering here (before packing) is identical to filtering
-            # the unpacked exchange rows
-            local = local[local["sim"].to_numpy() >= min_sim]
-        return pack_topk(local, "l_id", "r_id", "sim")
-
-    pairs = grouped_map_in_pandas(
-        joined, ["band", "bucket", "salt"], buckets_kernel, pair_schema,
-        num_partitions=gather_partitions if use_broadcast else None,
-    )
-    # fused dedup + per-left top-K: one shuffle instead of the
-    # dropDuplicates exchange + window exchange; combiner already applied
-    # inside the kernel, min_sim already applied pre-pack
-    return topk_per_key(
-        pairs, k, key="l_id", other="r_id", sim="sim", pre_combine=False,
-        packed_input=True,
+    if emb_bcs is not None:
+        cells = cells.drop("_emb")
+    return cell_topk(
+        cells, ["band", "bucket", "salt"],
+        _cosine_scorer(emb_dtype, emb_bcs), k,
+        df.select(id_col).schema.fields[0].dataType,
+        self_join=True, min_sim=min_sim, num_partitions=gather_partitions,
     )
 
 
@@ -521,198 +484,55 @@ def lsh_candidates_dyadic(
     the reference's two-table blocking. Both sides get signatures from the
     SAME seeded hyperplanes (a must: bucket keys are only comparable under
     identical planes); the shuffle co-locates each (band, bucket) group with
-    a side marker, and the per-bucket kernel computes left x right cosine
-    blocks. Global per-left top-K via window merge.
+    a role marker (left rows query, right rows index), and
+    ``grouped.cell_topk`` computes left x right cosine blocks per bucket
+    and merges the global per-left top-K.
 
-    Hot buckets are GRID salt-split, never truncated (fix for VERDICT r1
-    #2): a bucket with SL = ceil(size_l/max_bucket_rows) left splits and
-    SR = ceil(size_r/max_bucket_rows) right splits becomes an SL x SR grid
-    of tasks keyed (band, bucket, salt_l, salt_r). Each left row lands in
-    its hash split salt_l and is replicated across all SR right splits (and
-    symmetrically for right rows), so every (l, r) pair of the bucket is
-    examined exactly once — per-task cross-products stay bounded by
+    Hot buckets are GRID salt-split, never truncated (``grouped.
+    grid_salt_split``): a bucket with SL = ceil(size_l/max_bucket_rows) left
+    splits and SR = ceil(size_r/max_bucket_rows) right splits becomes an
+    SL x SR grid of tasks, so every (l, r) pair of the bucket is examined
+    exactly once — per-task cross-products stay bounded by
     max_bucket_rows^2 with zero recall loss vs the uncapped bucket.
 
-    ``gather`` (round 6 — ported from ``lsh_candidates``, same contract,
-    bit-identical output either way): ``'auto'`` broadcasts BOTH sides'
-    quantized matrices when each fits ``gather_max_bytes``, so the kernel
-    exchange ships only (band, bucket, salts, id, side) — the n_bands-fold
-    vector duplication (the widest shuffle of the dyadic plan) never
-    crosses the wire; above the gate (always, at 100 TB) the vector rides
-    the exchange as before. Requires per-side-unique ids on the broadcast
-    path (same contract as the self path's gather). The kernel output is
-    also packed (one row per l_id with parallel arrays, grouped.pack_topk)
-    — ~k-fold fewer merge-exchange rows, identical final pairs."""
+    ``gather`` has the same contract as in ``lsh_candidates`` (bit-identical
+    output either way): ``'auto'`` broadcasts BOTH sides' quantized
+    matrices when each fits ``gather_max_bytes``, so the kernel exchange
+    ships only (band, bucket, salts, id, role); above the gate (always, at
+    100 TB) the vector rides the exchange. Requires per-side-unique ids on
+    the broadcast path (same contract as the self path's gather)."""
+    _check_gather(gather)
     # One signature pass per side (VERDICT r2 #2): each side's emb-carrying
-    # signature frame is persisted and consumed by BOTH its bucket-size
-    # aggregation (a narrow projection, collected eagerly — this is what
-    # materializes the cache) and the candidate kernel. The merged oversized
-    # list is tiny by construction; when empty (healthy case) both salts are
-    # literal 0 and the plan has neither a join nor an explode.
+    # signature frame is persisted and consumed by BOTH the bucket-size
+    # aggregation of the grid split (a narrow projection, collected eagerly
+    # — this is what materializes the caches) and the candidate kernel.
     l_sigs = _persisted_sigs(left, l_id, emb_col, dim, n_bands, band_bits, seed,
                              emb_binary=True, emb_dtype=emb_dtype)
     r_sigs = _persisted_sigs(right, r_id, emb_col, dim, n_bands, band_bits, seed,
                              emb_binary=True, emb_dtype=emb_dtype)
-    grid: dict[tuple[int, int], list[int]] = {}
-    for row in _oversized_buckets(l_sigs, max_bucket_rows, ["band", "bucket", "_splits"]):
-        grid[(row["band"], row["bucket"])] = [row["_splits"], 1]
-    for row in _oversized_buckets(r_sigs, max_bucket_rows, ["band", "bucket", "_splits"]):
-        grid.setdefault((row["band"], row["bucket"]), [1, 1])[1] = row["_splits"]
 
-    if grid:
-        splits = left.sparkSession.createDataFrame(
-            [(b, k, sl, sr) for (b, k), (sl, sr) in grid.items()],
-            StructType(
-                [
-                    StructField("band", IntegerType(), False),
-                    StructField("bucket", LongType(), False),
-                    StructField("_sl", IntegerType(), False),
-                    StructField("_sr", IntegerType(), False),
-                ]
-            ),
+    def side(sigs: DataFrame, key: str, role: int) -> DataFrame:
+        return sigs.select(
+            F.col(key).alias("_id"), "band", "bucket", "_emb",
+            F.lit(role).alias("_role"),
         )
 
-        def salted(sigs: DataFrame, key: str, side: int) -> DataFrame:
-            own, other = ("_sl", "_sr") if side == 0 else ("_sr", "_sl")
-            return (
-                sigs.join(F.broadcast(splits), ["band", "bucket"], "left")
-                .withColumn("_own", F.coalesce(F.col(own), F.lit(1)))
-                .withColumn("_other", F.coalesce(F.col(other), F.lit(1)))
-                .withColumn("_my_salt", F.pmod(F.xxhash64(F.col(key)), F.col("_own")).cast("int"))
-                .withColumn(
-                    "_rep_salt",
-                    F.explode(F.sequence(F.lit(0), (F.col("_other") - 1).cast("int"))),
-                )
-                .select(
-                    F.col(key).alias("_id"), "band", "bucket",
-                    (F.col("_my_salt") if side == 0 else F.col("_rep_salt")).alias("salt_l"),
-                    (F.col("_rep_salt") if side == 0 else F.col("_my_salt")).alias("salt_r"),
-                    "_emb", F.lit(side).alias("_side"),
-                )
-            )
-    else:
-
-        def salted(sigs: DataFrame, key: str, side: int) -> DataFrame:
-            return sigs.select(
-                F.col(key).alias("_id"), "band", "bucket",
-                F.lit(0).alias("salt_l"), F.lit(0).alias("salt_r"),
-                "_emb", F.lit(side).alias("_side"),
-            )
-
-    if gather not in ("auto", "broadcast", "exchange"):
-        raise ValueError(
-            f"unknown gather: {gather!r} (use 'auto', 'broadcast' or 'exchange')"
-        )
-    both = salted(l_sigs, l_id, 0).unionByName(salted(r_sigs, r_id, 1))
-
-    # Broadcast-gather gate (see docstring): counts are near-free — the
-    # signature frames are persisted and already materialized by the
-    # bucket-size collects above.
-    dt_item = 2 if emb_dtype == "f16" else 4
-    use_broadcast = gather == "broadcast"
-    if gather == "auto":
-        n_l = l_sigs.count() // max(n_bands, 1)
-        n_r = r_sigs.count() // max(n_bands, 1)
-        use_broadcast = (
-            n_l * dim * dt_item <= gather_max_bytes
-            and n_r * dim * dt_item <= gather_max_bytes
-        )
-    emb_bcs = None
-    gather_partitions = None
-    if use_broadcast:
-        dt_np = np.float16 if emb_dtype == "f16" else np.float32
-
-        def _collect_side(sigs: DataFrame, key: str):
-            b0 = sigs.filter(F.col("band") == 0).select(key, "_emb").toPandas()
-            mat = (
-                np.frombuffer(b"".join(b0["_emb"].to_numpy()), dtype=dt_np)
-                .reshape(len(b0), -1)
-                if len(b0)
-                else np.zeros((0, dim), dtype=dt_np)
-            )
-            return _tracked(
-                left.sparkSession.sparkContext, (b0[key].to_numpy(), mat)
-            )
-
-        emb_bcs = (_collect_side(l_sigs, l_id), _collect_side(r_sigs, r_id))
-        both = both.select("band", "bucket", "salt_l", "salt_r", "_id", "_side")
-        # same AQE-coalescing exemption as the self path: narrow rows must
-        # not shrink the kernel stage's parallelism (matmul work per row is
-        # unchanged by row width)
-        gather_partitions = int(
-            left.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-
-    l_type = left.select(l_id).schema.fields[0].dataType
-    r_type = right.select(r_id).schema.fields[0].dataType
-    # packed kernel output (one row per l_id, parallel (r_id, sim) arrays):
-    # the merge exchange carries ~k-fold fewer rows, bit-identical pairs
-    pair_schema = StructType(
-        [
-            StructField("l_id", l_type, True),
-            StructField("_r", ArrayType(r_type), True),
-            StructField("_s", ArrayType(DoubleType()), True),
-        ]
+    cells = grid_salt_split(
+        side(l_sigs, l_id, 1).unionByName(side(r_sigs, r_id, 0)),
+        ["band", "bucket"], max_bucket_rows,
     )
-
-    def buckets_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids_all = pdf["_id"].to_numpy()
-        side_all = pdf["_side"].to_numpy()
-        if emb_bcs is not None:
-            lmask_all = side_all == 0
-            x_all = np.empty((len(pdf), dim), dtype=np.float64)
-            # per-side gather (upcast on assign == the self path's astype)
-            x_all[lmask_all] = _gather_rows(emb_bcs[0], ids_all[lmask_all])
-            x_all[~lmask_all] = _gather_rows(emb_bcs[1], ids_all[~lmask_all])
-            x_all = normalize_rows(np.nan_to_num(x_all))
-        else:
-            buf = b"".join(pdf["_emb"].to_numpy())
-            dt = np.float16 if emb_dtype == "f16" else np.float32
-            x_all = np.frombuffer(buf, dtype=dt).reshape(len(pdf), -1)
-            x_all = normalize_rows(np.nan_to_num(x_all.astype(np.float64)))
-        out_l, out_r, out_s = [], [], []
-        for a, b in group_slices(pdf, ["band", "bucket", "salt_l", "salt_r"]):
-            side = side_all[a:b]
-            lmask = side == 0
-            if not lmask.any() or lmask.all():
-                continue
-            lids, rids = ids_all[a:b][lmask], ids_all[a:b][~lmask]
-            lx, rx = x_all[a:b][lmask], x_all[a:b][~lmask]
-            sims = lx @ rx.T
-            kk = min(k, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk] if kk < sims.shape[1] \
-                else np.broadcast_to(np.arange(sims.shape[1]), sims.shape).copy()
-            rows = np.repeat(np.arange(len(lids)), part.shape[1])
-            cols = part.ravel()
-            out_l.append(lids[rows])
-            out_r.append(rids[cols])
-            out_s.append(sims[rows, cols])
-        if not out_l:
-            return pd.DataFrame({"l_id": [], "_r": [], "_s": []})
-        # fused map-side combiner (see lsh_candidates.buckets_kernel)
-        local = _dedup_topk(
-            pd.DataFrame(
-                {
-                    "l_id": np.concatenate(out_l),
-                    "r_id": np.concatenate(out_r),
-                    "sim": np.concatenate(out_s),
-                }
-            ),
-            k, "l_id", "r_id", "sim", with_rank=False,
-        )
-        if min_sim is not None:
-            # pre-merge row filter — commutes with the merge's dedup+topk
-            local = local[local["sim"].to_numpy() >= min_sim]
-        return pack_topk(local, "l_id", "r_id", "sim")
-
-    pairs = grouped_map_in_pandas(
-        both, ["band", "bucket", "salt_l", "salt_r"], buckets_kernel,
-        pair_schema,
-        num_partitions=gather_partitions if use_broadcast else None,
+    emb_bcs, gather_partitions = _broadcast_gather(
+        [(l_sigs, l_id), (r_sigs, r_id)], gather, gather_max_bytes, n_bands,
+        dim, emb_dtype,
     )
-    return topk_per_key(
-        pairs, k, key="l_id", other="r_id", sim="sim", pre_combine=False,
-        packed_input=True,
+    if emb_bcs is not None:
+        cells = cells.drop("_emb")
+    return cell_topk(
+        cells, ["band", "bucket", "salt_q", "salt_i"],
+        _cosine_scorer(emb_dtype, emb_bcs), k,
+        left.select(l_id).schema.fields[0].dataType,
+        right.select(r_id).schema.fields[0].dataType,
+        min_sim=min_sim, num_partitions=gather_partitions,
     )
 
 

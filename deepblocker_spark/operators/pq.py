@@ -397,93 +397,39 @@ def _assign_cells_pq(
     return df.select(id_col, emb_col).mapInPandas(assign, schema)
 
 
-def _ivf_pq_pairs(assigned, books_bc, k, id_type, mask_equal_ids, max_cell_rows):
-    """Probed-cell ADC search: the ivf-flat plan shape (persisted
-    assignment → grid salt-split → sort-based grouped kernel → fused
-    dedup+top-K merge, see ann._ivf_pairs) with the in-cell exact matmul
-    replaced by per-subspace LUT gathers over the index rows' codes. The
-    cell exchange carries m-byte codes for the (unreplicated) index role —
-    the nprobe-fold replication applies only to queries, and the code
-    payload is 32× smaller than the f32 vector it replaces."""
+def _adc_scorer(books_bc):
+    """``grouped.cell_topk`` scorer for IVFADC: query rows carry f32
+    vectors, index rows m-byte PQ codes; a (query x index) block is m
+    per-subspace LUT matmuls plus fancy-index gathers over the codes. The
+    cell exchange carries codes for the (unreplicated) index role — the
+    nprobe-fold replication applies only to queries, and the code payload
+    is 32x smaller than the f32 vector it replaces."""
     import numpy as np
-    import pandas as pd
-    from pyspark import StorageLevel
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from deepblocker_spark.operators.ann import _ASSIGN_CACHES, grid_salt_split
-    from deepblocker_spark.operators.grouped import (
-        _dedup_topk,
-        group_slices,
-        grouped_map_in_pandas,
-        pack_topk,
-        topk_per_key,
-    )
     from deepblocker_spark.operators.topk import normalize_rows
-    from pyspark.sql.types import ArrayType
 
-    assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-    _ASSIGN_CACHES.append(assigned)
-    salted = grid_salt_split(assigned, max_cell_rows)
-
-    # packed kernel output (round 6, same transport as the LSH/IVF kernels)
-    pair_schema = StructType(
-        [
-            StructField("l_id", id_type, True),
-            StructField("_r", ArrayType(id_type), True),
-            StructField("_s", ArrayType(DoubleType()), True),
-        ]
-    )
-
-    def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def scorer(pdf):
         books = books_bc.value
         m, _, dsub = books.shape
-        outs = []
-        roles = pdf["_role"].to_numpy()
         blobs = pdf["_emb"].to_numpy()
-        all_ids = pdf["_id"].to_numpy()
-        for a, b in group_slices(pdf, ["cell", "salt_q", "salt_i"]):
-            g_roles = roles[a:b]
-            q_idx = np.nonzero(g_roles == 1)[0] + a
-            i_idx = np.nonzero(g_roles == 0)[0] + a
-            if not len(q_idx) or not len(i_idx):
-                continue
-            qids = all_ids[q_idx]
-            iids = all_ids[i_idx]
-            qx = np.frombuffer(b"".join(blobs[q_idx]), dtype=np.float32).reshape(
-                len(q_idx), -1
+
+        def score(q, i):
+            qx = np.frombuffer(b"".join(blobs[q]), dtype=np.float32).reshape(
+                len(q), -1
             )
             qx = normalize_rows(np.nan_to_num(qx.astype(np.float64)))
-            codes = np.frombuffer(b"".join(blobs[i_idx]), dtype=np.uint8).reshape(
-                len(i_idx), m
+            codes = np.frombuffer(b"".join(blobs[i]), dtype=np.uint8).reshape(
+                len(i), m
             )
-            sims = np.zeros((len(q_idx), len(i_idx)))
+            sims = np.zeros((len(q), len(i)))
             for j in range(m):
                 lut = qx[:, j * dsub : (j + 1) * dsub] @ books[j].T
                 sims += lut[:, codes[:, j]]
-            if mask_equal_ids:
-                sims[qids[:, None] == iids[None, :]] = -np.inf
-            kk = min(k, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk] if kk < sims.shape[1] \
-                else np.broadcast_to(np.arange(sims.shape[1]), sims.shape).copy()
-            rows = np.repeat(np.arange(len(qids)), part.shape[1])
-            cols = part.ravel()
-            s = sims[rows, cols]
-            keep = s > -np.inf
-            outs.append(pd.DataFrame(
-                {"l_id": qids[rows[keep]], "r_id": iids[cols[keep]], "sim": s[keep]}
-            ))
-        if not outs:
-            return pd.DataFrame({"l_id": [], "_r": [], "_s": []})
-        local = _dedup_topk(
-            pd.concat(outs, ignore_index=True), k, "l_id", "r_id", "sim",
-            with_rank=False,
-        )
-        return pack_topk(local, "l_id", "r_id", "sim")
+            return sims
 
-    pairs = grouped_map_in_pandas(
-        salted, ["cell", "salt_q", "salt_i"], cell_kernel, pair_schema
-    )
-    return topk_per_key(pairs, k, pre_combine=False, packed_input=True)
+        return score
+
+    return scorer
 
 
 def ivf_pq_topk(
@@ -504,7 +450,11 @@ def ivf_pq_topk(
     travels and sits in memory (m bytes per index row). -> (l_id, r_id,
     sim(ADC estimate), rank), trivial self-match excluded. One source scan
     emits both roles; same two-exchange plan as ivf_topk."""
-    from deepblocker_spark.operators.ann import _auto_n_cells, _train_centroids
+    from deepblocker_spark.operators.ann import (
+        _auto_n_cells,
+        _ivf_pairs,
+        _train_centroids,
+    )
 
     spark = df.sparkSession
     n = rows_hint if rows_hint is not None else df.count()
@@ -522,7 +472,8 @@ def ivf_pq_topk(
         emit_home=True, emit_probes=True,
     )
     id_type = df.select(id_col).schema.fields[0].dataType
-    return _ivf_pq_pairs(assigned, books_bc, k, id_type, True, max_cell_rows)
+    return _ivf_pairs(assigned, _adc_scorer(books_bc), k, id_type, True,
+                      max_cell_rows)
 
 
 def ivf_pq_topk_join(
@@ -543,7 +494,11 @@ def ivf_pq_topk_join(
     """Dyadic IVFADC: ``right`` is the index (home cells, PQ codes),
     ``left`` is the query side (nprobe cells, f32 vectors). Centroids and
     codebooks train on the INDEX side; ``rows_hint`` skips its count."""
-    from deepblocker_spark.operators.ann import _auto_n_cells, _train_centroids
+    from deepblocker_spark.operators.ann import (
+        _auto_n_cells,
+        _ivf_pairs,
+        _train_centroids,
+    )
 
     if left.select(l_id).schema.fields[0].dataType != \
             right.select(r_id).schema.fields[0].dataType:
@@ -569,7 +524,8 @@ def ivf_pq_topk_join(
     )
     assigned = idx.unionByName(qry)
     id_type = left.select(l_id).schema.fields[0].dataType
-    return _ivf_pq_pairs(assigned, books_bc, k, id_type, False, max_cell_rows)
+    return _ivf_pairs(assigned, _adc_scorer(books_bc), k, id_type, False,
+                      max_cell_rows)
 
 
 class PQVectorPairing:

@@ -42,7 +42,6 @@ from deepblocker_spark.operators.ann import (
     _assign_cells,
     _auto_n_cells,
     _train_centroids,
-    grid_salt_split,
 )
 from deepblocker_spark.operators.bc_registry import (
     tracked_broadcast as _tracked,
@@ -94,6 +93,7 @@ def semantic_dedup(
     )
 
     from deepblocker_spark.operators.grouped import (
+        grid_salt_split,
         group_slices,
         grouped_map_in_pandas,
     )
@@ -116,7 +116,7 @@ def semantic_dedup(
     both_roles = assigned.unionByName(
         assigned.withColumn("_role", F.lit(1).cast("int"))
     )
-    salted = grid_salt_split(both_roles, max_cell_rows)
+    salted = grid_salt_split(both_roles, ["cell"], max_cell_rows)
 
     id_type = df.select(id_col).schema.fields[0].dataType
     part_schema = StructType(

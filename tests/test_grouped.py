@@ -153,19 +153,13 @@ def test_lsh_candidates_pre_combine_lock(spark):
     with_combine = run()
     orig = grouped.topk_per_key
     try:
+        # cell_topk resolves topk_per_key in grouped's namespace
         grouped.topk_per_key = lambda *a, **kw: orig(
             *a, **{**kw, "pre_combine": False}
         )
-        # lsh.py imported the symbol directly; patch there too
-        from deepblocker_spark.operators import lsh as lsh_mod
-
-        lsh_mod.topk_per_key = grouped.topk_per_key
         without = run()
     finally:
         grouped.topk_per_key = orig
-        from deepblocker_spark.operators import lsh as lsh_mod
-
-        lsh_mod.topk_per_key = orig
     assert with_combine == without
     assert len(with_combine) > 0
 

@@ -96,7 +96,7 @@ def materialize(parquet_path: str, out_dir: str) -> None:
 
 def _kernel_task(path: str):
     """One kernel-stage task: the exact per-partition work of the bucket
-    kernel + map-side combiner (lsh.buckets_kernel + grouped._dedup_topk),
+    kernel + map-side combiner (the grouped.cell_topk self-join kernel),
     minus Spark: parquet decompress stands in for shuffle-read decompress."""
     from deepblocker_spark.operators.grouped import _dedup_topk, group_slices
     from deepblocker_spark.operators.topk import normalize_rows
